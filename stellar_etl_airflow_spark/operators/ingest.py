@@ -27,7 +27,6 @@ from pyspark.sql import types as T
 from ..sinks import writer
 from ..sources.ndjson import read_ndjson, stamp_batch_columns
 from .batch import BatchWindow
-from ..session import local_df
 
 BATCH_RUNS_SCHEMA = T.StructType(
     [
@@ -79,8 +78,42 @@ class Warehouse:
 def record_batch_stats(
     spark: SparkSession, wh: Warehouse, window: BatchWindow, table: str, batch_start: datetime
 ) -> None:
-    row = [(window.batch_id, window.batch_run_date, window.start_ledger, window.end_ledger, table, batch_start)]
-    local_df(spark, row, BATCH_RUNS_SCHEMA).write.mode("append").parquet(wh.meta_path())
+    """Append one lineage row to ``_meta/batch_runs``
+    (build_batch_stats.py:9-43), staged on the driver with pyarrow — the
+    pattern of ``append_versioned_rows``. A Spark job for one row costs a
+    scheduling round and a Python-worker trip (~0.3 s); this costs a few
+    ms. The file reads back exactly as a Spark-written one:
+
+    - values go through pyspark's own ``toInternal`` (what
+      ``createDataFrame`` stores), so the instants match to the
+      microsecond, local-zone handling of naive datetimes included;
+    - the footer carries Spark's schema JSON under
+      ``org.apache.spark.sql.parquet.row.metadata``, so
+      ``batch_run_date`` reads back as ``timestamp_ntz``;
+    - the file is written under a dot-prefixed name, which readers skip,
+      then renamed into place."""
+    import uuid
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    row = (window.batch_id, window.batch_run_date, window.start_ledger, window.end_ledger, table, batch_start)
+    # toInternal gives microseconds for both timestamp kinds; only
+    # TimestampType is UTC-adjusted
+    arrow_types = (pa.string(), pa.timestamp("us"), pa.int64(), pa.int64(), pa.string(), pa.timestamp("us", tz="UTC"))
+    arrays = [
+        pa.array([f.dataType.toInternal(v)], type=t)
+        for f, v, t in zip(BATCH_RUNS_SCHEMA.fields, row, arrow_types)
+    ]
+    tbl = pa.Table.from_arrays(arrays, names=BATCH_RUNS_SCHEMA.names).replace_schema_metadata(
+        {"org.apache.spark.sql.parquet.row.metadata": BATCH_RUNS_SCHEMA.json()}
+    )
+    path = wh.meta_path()
+    os.makedirs(path, exist_ok=True)
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    tmp = os.path.join(path, f".{name}.tmp")
+    pq.write_table(tbl, tmp)
+    os.replace(tmp, os.path.join(path, name))
 
 
 def record_ingest_counters(

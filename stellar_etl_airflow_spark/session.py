@@ -100,23 +100,65 @@ def get_spark(
     # measured r13/r14 via /proc/stat `processes`). The bundled jar
     # (tools/fastfs, ~60 lines of Java) reimplements setPermission with
     # java.nio setPosixFilePermissions — identical checksummed-FS
-    # semantics, no fork. Driver classpath confs only take effect at JVM
-    # launch, so this works for the session that starts the JVM (bench,
-    # driver, tests) and is a no-op conf on an already-running JVM.
+    # semantics, no fork. The driver classpath only takes effect when the
+    # JVM launches, so only the call that launches it turns the shim on:
+    # a SparkContext created later in a JVM launched without the jar
+    # would otherwise fail every file:// access with ClassNotFoundException.
     # Local-mode-only concern: on HDFS/S3 the code path does not exist.
+    extra = dict(extra_conf or {})
     _jar = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jars", "fastlocalfs.jar")
     if os.environ.get("SPARK_GRAFT_FASTFS", "1") != "0" and os.path.exists(_jar):
-        builder = (
-            builder.config("spark.driver.extraClassPath", _jar)
-            .config("spark.hadoop.fs.file.impl", "fastlocalfs.FastLocalFileSystem")
-            .config("spark.hadoop.fs.AbstractFileSystem.file.impl", "fastlocalfs.FastLocalFs")
-        )
-    for k, v in (extra_conf or {}).items():
+        from pyspark import SparkContext
+
+        # PYSPARK_GATEWAY_PORT: spark-submit launched the JVM already
+        if SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ:
+            classpath = extra.get(_CLASSPATH) or _spark_defaults().get(_CLASSPATH)
+            extra.update(_fastfs_conf(_jar, classpath))
+    for k, v in extra.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     if warm_ds:
         warm_python_data_source(spark)
     return spark
+
+
+_CLASSPATH = "spark.driver.extraClassPath"
+
+
+def _fastfs_conf(jar: str, classpath: str | None) -> dict:
+    """Confs that turn the fastfs shim on in a JVM about to launch. An
+    existing driver ``classpath`` is kept, with the jar appended."""
+    entries = [p for p in (classpath or "").split(os.pathsep) if p]
+    if jar not in entries:
+        entries.append(jar)
+    return {
+        _CLASSPATH: os.pathsep.join(entries),
+        "spark.hadoop.fs.file.impl": "fastlocalfs.FastLocalFileSystem",
+        "spark.hadoop.fs.AbstractFileSystem.file.impl": "fastlocalfs.FastLocalFs",
+    }
+
+
+def _spark_defaults() -> dict:
+    """``spark-defaults.conf`` (``$SPARK_CONF_DIR`` or
+    ``$SPARK_HOME/conf``) as a dict; empty when there is none."""
+    conf_dir = os.environ.get("SPARK_CONF_DIR")
+    if not conf_dir:
+        from pyspark.find_spark_home import _find_spark_home
+
+        conf_dir = os.path.join(_find_spark_home(), "conf")
+    import re
+
+    out = {}
+    try:
+        with open(os.path.join(conf_dir, "spark-defaults.conf")) as fh:
+            for line in fh:
+                # java.util.Properties: key, then whitespace, '=' or ':'
+                parts = re.split(r"\s*[=:\s]\s*", line.strip(), maxsplit=1)
+                if len(parts) == 2 and not parts[0].startswith(("#", "!")):
+                    out[parts[0]] = parts[1]
+    except OSError:
+        pass
+    return out
 
 
 def warm_python_data_source(spark: SparkSession) -> None:

@@ -8,11 +8,12 @@
   ORDER BY is only a per-file ordering guarantee in a parallel writer, so
   we sort within partitions after range-partitioning on the sort key,
   matching the practical contract of the BigQuery export (SURVEY §7.2
-  hard part b). This container lacks the spark-avro connector jar, so the
-  writer produces REAL Avro binary through the pure-Python container
-  encoder (avro_writer.py), one file per partition via mapInArrow; with
-  the jar present the DataSource path is used instead. Either way the
-  bytes on the wire are Avro Object Container Files.
+  hard part b). When the spark-avro DataSource is present, Spark writes
+  and reads the Avro itself. Without the connector jar (this container),
+  the writer produces REAL Avro binary through the column codec in
+  avro_writer.py — one file per partition via mapInArrow, each Arrow
+  batch encoded a column at a time — and read_export decodes it the same
+  way. Either way the bytes on the wire are Avro Object Container Files.
 - NDJSON extract: dumps one table slice to a single JSON file
   (dbt_stellar_marts_dag.py:162-178, the DefiLlama tvl feed).
 - copy / clone: WRITE_TRUNCATE table copy (build_copy_table_task.py:9-65)
@@ -61,8 +62,8 @@ def export_slice(
 def write_avro_or_parquet(out: DataFrame, dest: str) -> str:
     """Write avro via the spark-avro DataSource when present; when the
     connector jar is absent, write REAL Avro binary anyway through the
-    pure-Python container writer (avro_writer.py) running distributed —
-    one Avro Object Container File per partition via mapInArrow. Returns
+    column codec (avro_writer.py) running distributed — one Avro Object
+    Container File per partition via mapInArrow. Returns
     the format actually written ('avro' either way; 'parquet' remains only
     as a last-resort marker if the Python writer cannot express a type).
     Read results back with :func:`read_export` (DataSource if present,
@@ -92,9 +93,11 @@ def _missing_avro_datasource(exc: Exception) -> bool:
 
 def write_avro_distributed(out: DataFrame, dest: str, codec: str = "deflate") -> int:
     """Distributed Avro export without the spark-avro jar: each partition
-    writes one Avro Object Container File (pure-Python encoder,
-    avro_writer.py) via mapInArrow — Arrow batches preserve null/timestamp
-    /decimal fidelity exactly (no pandas NaN ambiguity). The per-partition
+    writes one Avro Object Container File via mapInArrow. The partition's
+    Arrow batches go straight to the column codec
+    (``avro_writer.write_container``), which encodes them a column at a
+    time from the Arrow buffers — no per-row Python objects, and Arrow
+    keeps null/timestamp/decimal fidelity exactly. The per-partition
     write preserves sortWithinPartitions ordering, matching the reference
     export's per-file ordering contract. Blocks are deflate-compressed by
     default (the spec's RFC-1951 codec, stdlib zlib) — the right trade for
@@ -112,12 +115,12 @@ def write_avro_distributed(out: DataFrame, dest: str, codec: str = "deflate") ->
     os.makedirs(dest, exist_ok=True)
 
     def write_part(batches):
-        rows = (r for b in batches for r in b.to_pylist())
-        first = next(rows, None)
+        batches = (b for b in batches if b.num_rows)
+        first = next(batches, None)
         if first is None:
             return  # empty partition -> no file
         path = os.path.join(dest, AW.new_part_name())
-        n = AW.write_container(path, avsc, itertools.chain([first], rows), codec=codec)
+        n = AW.write_container(path, avsc, itertools.chain([first], batches), codec=codec)
         yield pa.RecordBatch.from_pydict({"file": [path], "n_rows": [n]})
 
     manifest = out.mapInArrow(write_part, "file string, n_rows long").collect()
@@ -133,9 +136,10 @@ def write_avro_distributed(out: DataFrame, dest: str, codec: str = "deflate") ->
 def read_export(spark: SparkSession, fmt: str, path: str) -> DataFrame:
     """Read an export directory or file written by write_avro_or_parquet:
     parquet via the native reader; avro via the DataSource when present,
-    else the pure-Python container reader running DISTRIBUTED (one
-    mapInArrow task per container file — executors decode in parallel;
-    only the first file's header is opened on the driver, for the schema)."""
+    else the column decoder (``avro_writer.read_arrow``) running
+    DISTRIBUTED — one mapInArrow task per container file, each yielding
+    one Arrow RecordBatch; only the first file's header is opened on the
+    driver, for the schema."""
     if fmt == "parquet":
         return spark.read.parquet(path)
     try:
@@ -154,19 +158,12 @@ def read_export(spark: SparkSession, fmt: str, path: str) -> DataFrame:
         raise FileNotFoundError(f"no .avro files under {path}")
     head_avsc, _ = AW.read_container(files[0], meta_only=True)
     schema = AW.avro_schema_to_spark(head_avsc)
-
-    import pyarrow as pa
-
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    arrow_schema = to_arrow_schema(schema)
+    arrow_schema = AW.arrow_schema_for(head_avsc)
 
     def read_part(batches):
         for b in batches:
-            for rec in b.to_pylist():
-                avsc, raw = AW.read_container(rec["path"])
-                rows = [AW.decode_logicals(avsc, r) for r in raw]
-                yield pa.RecordBatch.from_pylist(rows, schema=arrow_schema)
+            for p in b.column("path").to_pylist():
+                yield AW.read_arrow(p, arrow_schema)
 
     fdf = local_df(spark, [(f,) for f in files], "path string").repartition(len(files))
     return fdf.mapInArrow(read_part, schema)

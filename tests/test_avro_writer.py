@@ -9,10 +9,12 @@ were not real Avro, DataFileReader would reject them."""
 from __future__ import annotations
 
 import datetime as dt
+import io
 import json
 import os
 from decimal import Decimal
 
+import pytest
 from pyspark.sql import types as T
 
 from stellar_etl_airflow_spark.sinks import avro_writer as AW
@@ -197,3 +199,203 @@ def test_deflate_compresses_repetitive_data(tmp_path):
     AW.write_container(raw_p, avsc, rows, codec="null")
     AW.write_container(dfl_p, avsc, rows, codec="deflate")
     assert os.path.getsize(dfl_p) < os.path.getsize(raw_p) / 10
+
+
+# ------------------------------------------------------------- column codec
+
+from hypothesis import HealthCheck, given, settings  # noqa: E402
+from hypothesis import strategies as st  # noqa: E402
+
+CODEC_SCHEMA = T.StructType(
+    [
+        T.StructField("id", T.LongType(), False),
+        T.StructField("n", T.LongType(), True),
+        T.StructField("i", T.IntegerType(), True),
+        T.StructField("d", T.DoubleType(), True),
+        T.StructField("f", T.FloatType(), True),
+        T.StructField("b", T.BooleanType(), True),
+        T.StructField("s", T.StringType(), True),
+        T.StructField("raw", T.BinaryType(), True),
+        T.StructField("ts", T.TimestampType(), True),
+        T.StructField("day", T.DateType(), True),
+        T.StructField("amount", T.DecimalType(20, 6), True),
+        T.StructField("tags", T.ArrayType(T.StringType(), True), True),
+        T.StructField("attrs", T.MapType(T.StringType(), T.LongType(), True), True),
+        T.StructField("rec", T.StructType([T.StructField("a", T.LongType()), T.StructField("z", T.StringType())]), True),
+    ]
+)
+I64 = st.one_of(st.integers(-(2**63), 2**63 - 1), st.sampled_from([-(2**63), 2**63 - 1, -1, 0, 63, 64, -64, -65]))
+
+
+def _opt(s):
+    return st.one_of(st.none(), s)
+
+
+codec_row = st.fixed_dictionaries(
+    {
+        "id": I64,
+        "n": _opt(I64),
+        "i": _opt(st.integers(-(2**31), 2**31 - 1)),
+        "d": _opt(st.one_of(st.floats(), st.sampled_from([float("nan"), float("inf"), float("-inf"), -0.0]))),
+        "f": _opt(st.floats(width=32)),
+        "b": _opt(st.booleans()),
+        "s": _opt(st.one_of(st.text(), st.sampled_from(["", "é", "日本語", "\U0001f680"]))),
+        "raw": _opt(st.binary(max_size=20)),
+        # pre-epoch through far future, microsecond precision
+        "ts": _opt(st.datetimes(min_value=dt.datetime(1900, 1, 1), max_value=dt.datetime(2200, 1, 1))),
+        "day": _opt(st.dates(min_value=dt.date(1, 1, 1))),
+        "amount": _opt(st.decimals(min_value=-(10**13), max_value=10**13, places=6, allow_nan=False)),
+        "tags": _opt(st.lists(_opt(st.text(max_size=4)), max_size=3)),
+        "attrs": _opt(st.dictionaries(st.text(max_size=3), _opt(I64), max_size=3)),
+        "rec": _opt(st.fixed_dictionaries({"a": _opt(I64), "z": _opt(st.text(max_size=4))})),
+    }
+)
+
+
+def _row_loop(avsc, batch) -> bytes:
+    """The per-value reference encoding: _encode over each row."""
+    out = io.BytesIO()
+    for r in batch.to_pylist():
+        AW._encode(out, avsc, r)
+    return out.getvalue()
+
+
+def _batch(avsc, rows):
+    import pyarrow as pa
+
+    return pa.RecordBatch.from_pylist(rows, schema=AW.arrow_schema_for(avsc))
+
+
+@settings(max_examples=60, deadline=None, suppress_health_check=list(HealthCheck))
+@given(rows=st.lists(codec_row, max_size=25))
+def test_column_encoder_matches_row_encoder(rows):
+    """Every column kind, nulls and edge values: the column codec's bytes
+    equal _encode's, row for row (decimal/array/map/record ride the
+    per-value path inside the column codec)."""
+    avsc = AW.spark_schema_to_avro(CODEC_SCHEMA)
+    batch = _batch(avsc, rows)
+    payload, ends = AW.encode_batch(avsc, batch)
+    assert payload.tobytes() == _row_loop(avsc, batch)
+    assert len(ends) == len(rows)
+    # each record's end offset is where the row loop's record ends
+    out, want = io.BytesIO(), []
+    for r in batch.to_pylist():
+        AW._encode(out, avsc, r)
+        want.append(out.tell())
+    assert ends.tolist() == want
+
+
+def _sliced_batches(sizes):
+    """One batch with nulls, unicode and negative values, and its slices
+    of ``sizes`` rows (non-zero buffer offsets included)."""
+    import pyarrow as pa
+
+    n = sum(sizes)
+    whole = pa.RecordBatch.from_pydict(
+        {
+            "k": pa.array([(i * 7919) % 1000 - 500 for i in range(n)], pa.int64()),
+            "s": pa.array([None if i % 17 == 0 else f"é{i}" * (i % 4) for i in range(n)], pa.string()),
+            "x": pa.array([None if i % 13 == 0 else i / 3 for i in range(n)], pa.float64()),
+            "ts": pa.array([None if i % 11 == 0 else (i - n // 2) * 1_000_003 for i in range(n)], pa.int64())
+            .cast(pa.timestamp("us", tz="UTC")),
+        }
+    )
+    out, at = [], 0
+    for m in sizes:
+        out.append(whole.slice(at, m))
+        at += m
+    return whole, out
+
+
+ARROW_SCHEMA = T.StructType(
+    [
+        T.StructField("k", T.LongType(), True),
+        T.StructField("s", T.StringType(), True),
+        T.StructField("x", T.DoubleType(), True),
+        T.StructField("ts", T.TimestampType(), True),
+    ]
+)
+
+
+@pytest.mark.parametrize("codec", ["null", "deflate"])
+def test_blocks_cross_record_limit_and_batch_ends(tmp_path, codec):
+    """Blocks hold BLOCK_RECORDS records whatever the Arrow batching: a
+    block may start mid-batch and end in a later one. The payloads equal
+    the row encoder's bytes for the same rows."""
+    avsc = AW.spark_schema_to_avro(ARROW_SCHEMA)
+    whole, batches = _sliced_batches([3000, 0, 3000, 5000, 1])
+    path = str(tmp_path / "b.avro")
+    assert AW.write_container(path, avsc, iter(batches), codec=codec) == 11001
+    _, blocks = AW._open_container(path)
+    blocks = list(blocks)
+    assert [c for c, _ in blocks] == [4096, 4096, 2809]
+    assert b"".join(d for _, d in blocks) == _row_loop(avsc, whole)
+    assert AW.read_arrow(path).equals(whole)
+
+
+@pytest.mark.parametrize("codec", ["null", "deflate"])
+def test_java_avro_reads_column_encoded_files(spark, tmp_path, codec):
+    """The official Java DataFileReader parses multi-block files written
+    from Arrow batches and sees the same records."""
+    avsc = AW.spark_schema_to_avro(ARROW_SCHEMA)
+    whole, batches = _sliced_batches([5000, 4000])
+    path = str(tmp_path / f"j-{codec}.avro")
+    AW.write_container(path, avsc, batches, codec=codec)
+    jvm = spark._jvm
+    reader = jvm.org.apache.avro.file.DataFileReader(
+        jvm.java.io.File(path), jvm.org.apache.avro.generic.GenericDatumReader()
+    )
+    want = whole.to_pylist()
+    try:
+        assert reader.getMetaString("avro.codec") == codec
+        i = 0
+        while reader.hasNext():
+            rec = reader.next()
+            if i % 997 == 0 or i in (4095, 4096, 8999):
+                got = json.loads(rec.toString())
+                w = want[i]
+                assert got["k"] == w["k"]
+                assert got["s"] == w["s"]
+                assert got["x"] == w["x"]
+                assert got["ts"] == (None if w["ts"] is None else AW._to_micros(w["ts"]))
+            i += 1
+        assert i == 9000
+    finally:
+        reader.close()
+
+
+@settings(max_examples=25, deadline=None, suppress_health_check=list(HealthCheck))
+@given(rows=st.lists(codec_row, max_size=25))
+def test_column_decoder_matches_row_decoder(tmp_path_factory, rows):
+    """read_arrow gives exactly what the row reader (read_container +
+    decode_logicals + from_pylist) gives on the same file."""
+    import pyarrow as pa
+
+    avsc = AW.spark_schema_to_avro(CODEC_SCHEMA)
+    path = str(tmp_path_factory.mktemp("dec") / "d.avro")
+    AW.write_container(path, avsc, [_batch(avsc, rows)], codec="deflate")
+    _, raw = AW.read_container(path)
+    old = pa.RecordBatch.from_pylist([AW.decode_logicals(avsc, r) for r in raw], schema=AW.arrow_schema_for(avsc))
+    new = AW.read_arrow(path)
+    assert new.schema == old.schema
+    # NaN != NaN: compare the bytes of the float columns, the rest by value
+    for name in new.schema.names:
+        a, b = new.column(name), old.column(name)
+        if name in ("d", "f"):
+            assert a.is_null().equals(b.is_null())
+            assert a.fill_null(0).to_numpy().tobytes() == b.fill_null(0).to_numpy().tobytes()
+        else:
+            assert a.equals(b), name
+
+
+def test_null_in_non_nullable_field_raises_like_row_encoder():
+    """The column codec never writes a made-up value for a null the
+    schema does not allow: it fails the way _encode does."""
+    import pyarrow as pa
+
+    avsc = AW.spark_schema_to_avro(T.StructType([T.StructField("id", T.LongType(), False)]))
+    batch = pa.RecordBatch.from_pydict({"id": pa.array([1, None], pa.int64())})
+    with pytest.raises(TypeError):
+        _row_loop(avsc, batch)
+    with pytest.raises(TypeError):
+        AW.encode_batch(avsc, batch)

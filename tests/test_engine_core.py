@@ -129,6 +129,44 @@ def test_ingest_replay_idempotent(spark, tmp_path):
     assert {"batch_id", "batch_run_date", "batch_insert_ts"} <= set(tbl.columns)
 
 
+def test_lineage_row_driver_staged_reads_like_spark_written(spark, tmp_path):
+    """record_batch_stats writes its row with pyarrow on the driver. Next to
+    a row written by Spark itself (createDataFrame + parquet append), both
+    read back identically, together and apart, with the table's schema —
+    batch_run_date stays timestamp_ntz and the instants match exactly."""
+    from stellar_etl_airflow_spark.operators.ingest import BATCH_RUNS_SCHEMA, record_batch_stats
+    from stellar_etl_airflow_spark.session import local_df
+
+    wh = Warehouse(str(tmp_path / "wh"))
+    w = _window()
+    start = datetime(2024, 3, 1, 12, 30, 45, 123456)
+    spark_row = ("spark-" + w.batch_id, w.batch_run_date, w.start_ledger, w.end_ledger, "accounts", start)
+    local_df(spark, [spark_row], BATCH_RUNS_SCHEMA).write.mode("append").parquet(wh.meta_path())
+    record_batch_stats(spark, wh, w, "accounts", start)
+
+    files = [f for f in os.listdir(wh.meta_path()) if f.endswith(".parquet")]
+    assert len(files) == 2
+    assert not [f for f in os.listdir(wh.meta_path()) if f.endswith(".tmp")]
+    # the footer's Spark schema keeps timestamp_ntz even when inference
+    # of NTZ from the parquet type is off (ensure_read_confs turns it off)
+    conf = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    prev = spark.conf.get(conf)
+    try:
+        for infer in ("true", "false"):
+            spark.conf.set(conf, infer)
+            for f in files:
+                assert spark.read.parquet(os.path.join(wh.meta_path(), f)).schema == BATCH_RUNS_SCHEMA
+    finally:
+        spark.conf.set(conf, prev)
+    both = spark.read.parquet(wh.meta_path())
+    assert both.schema == BATCH_RUNS_SCHEMA
+    cols = ["batch_run_date", "start_ledger", "end_ledger", "table_name", "batch_start",
+            "unix_micros(batch_start) AS start_us", "cast(batch_run_date AS string) AS run_date"]
+    got = {r["batch_id"]: tuple(r)[1:] for r in both.selectExpr("batch_id", *cols).collect()}
+    assert got[w.batch_id] == got["spark-" + w.batch_id]
+    assert got[w.batch_id][-1] == str(w.batch_run_date)
+
+
 # ----------------------------------------------------------------------- merge
 def test_merge_upsert_semantics(spark):
     target = spark.createDataFrame(
