@@ -24,7 +24,9 @@ def load_warehouse(spark: SparkSession, wh: Warehouse, include_meta: bool = Fals
         df.createOrReplaceTempView(t)
         names.append(t)
     if include_meta:
-        spark.read.parquet(wh.meta_path()).createOrReplaceTempView("batch_runs")
+        from .sinks.snapshots import read_snapshot
+
+        read_snapshot(spark, wh.meta_path()).createOrReplaceTempView("batch_runs")
         names.append("batch_runs")
     return names
 

@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sinks import snapshots as S
+from .merge import load_table_props, pin_table_props
 
 _PROPS = "_additive_mor.json"
 
@@ -50,49 +51,11 @@ class NotAdditiveMorTable(ValueError):
     so any rewording silently flipped its behavior)."""
 
 
-def _props_path(path: str) -> str:
-    return os.path.join(S._snap_dir(path), _PROPS)
-
-
-def _load_props(path: str) -> dict | None:
-    import json
-
-    try:
-        with open(_props_path(path)) as fh:
-            return json.load(fh)
-    except FileNotFoundError:
-        return None
-
-
-def _check_or_pin(path: str, keys, sum_cols) -> None:
-    import json
-
-    props = _load_props(path)
-    if props is None:
-        os.makedirs(S._snap_dir(path), exist_ok=True)
-        # exclusive CREATE, not check-then-write (ADVICE r10): two
-        # concurrent FIRST writers with different key/sum splits would
-        # otherwise each validate against their own pin and the last
-        # atomic replace would silently win — the loser's deltas then
-        # fold under the wrong split. The link-claim makes exactly one
-        # writer the pinner; everyone else falls through and validates
-        # against the winner's pin like any later writer.
-        try:
-            S._atomic_write_exclusive(
-                _props_path(path),
-                json.dumps({"keys": list(keys), "sum_cols": list(sum_cols)}),
-            )
-            return
-        except S.ConcurrentWriteError:
-            props = _load_props(path)
-            if props is None:  # pinner vanished between link-fail and read
-                raise
-    for name, got in (("keys", list(keys)), ("sum_cols", list(sum_cols))):
-        if props.get(name) != got:
-            raise ValueError(
-                f"{path} is an additive-MoR table with {name}={props.get(name)!r}; "
-                f"got {got!r}"
-            )
+def _pin(path: str, keys, sum_cols) -> None:
+    pin_table_props(
+        path, {"keys": list(keys), "sum_cols": list(sum_cols)},
+        ("keys", "sum_cols"), "an additive-MoR table", name=_PROPS,
+    )
 
 
 def write_delta(
@@ -121,7 +84,7 @@ def write_delta(
                 f"write_delta: sum column {f.name!r} is {f.dataType.typeName()} — "
                 "use long/decimal (float addition is order-dependent)"
             )
-    _check_or_pin(path, keys, sum_cols)
+    _pin(path, keys, sum_cols)
     return S.append_versioned(spark, batch, path, txn_id=txn_id)
 
 
@@ -154,7 +117,7 @@ def write_delta_rows(
                 f"write_delta_rows: sum column {n!r} is {t} — use "
                 "long/decimal (float addition is order-dependent)"
             )
-    _check_or_pin(path, keys, sum_cols)
+    _pin(path, keys, sum_cols)
     return S.append_versioned_rows(spark, rows, schema, path, txn_id=txn_id)
 
 
@@ -163,7 +126,7 @@ def read_additive(spark: SparkSession, path: str, version: int | None = None) ->
     delta (and any previously folded base rows — a fold's output is
     itself just rows that sum). Time travel works: ``version`` folds
     exactly that version's pile."""
-    props = _load_props(path)
+    props = load_table_props(path, _PROPS)
     if props is None:
         raise NotAdditiveMorTable(f"{path} is not an additive-MoR table (no {_PROPS})")
     keys, sum_cols = props["keys"], props["sum_cols"]
@@ -210,7 +173,7 @@ def fold_additive(
     ``max_refolds``."""
     if max_retries is not None:
         max_refolds = max_retries
-    props = _load_props(path)
+    props = load_table_props(path, _PROPS)
     if props is None:
         raise NotAdditiveMorTable(f"{path} is not an additive-MoR table (no {_PROPS})")
     last: Exception | None = None
@@ -326,11 +289,7 @@ def fold_additive(
                 # refold, rebase budget spent, or an unexpected raise:
                 # this attempt's staged files are referenced by no
                 # manifest — remove them instead of leaving orphans
-                for f in new_files:
-                    try:
-                        os.remove(f)
-                    except OSError:
-                        pass
+                S._drop_unpublished(new_files)
         if not refold:
             raise S.ConcurrentWriteError(
                 f"fold of {path} lost 50 consecutive append-rebase publishes "

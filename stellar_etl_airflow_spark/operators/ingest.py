@@ -38,6 +38,8 @@ BATCH_RUNS_SCHEMA = T.StructType(
         T.StructField("batch_start", T.TimestampType()),
     ]
 )
+#: ``BATCH_RUNS_SCHEMA`` as the DDL string ``append_versioned_rows`` takes
+BATCH_RUNS_DDL = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in BATCH_RUNS_SCHEMA.fields)
 
 
 @dataclass
@@ -57,12 +59,12 @@ class Warehouse:
 
     def recover(self) -> list[str]:
         """Restore directories left mid-swap by an interrupted
-        :func:`..operators.merge.safe_overwrite` (a ``.bak-<name>`` dir with
-        no ``<name>``). Walks the WHOLE tree, not just top-level tables —
-        compaction swaps leaf partition dirs, so a crash can leave a backup
-        nested arbitrarily deep. Call once at startup. Returns the
-        root-relative paths recovered."""
-        from .merge import BACKUP_PREFIX, recover_overwrite
+        :func:`..operators.maintenance.compact_table` (a ``.bak-<name>``
+        dir with no ``<name>``). Walks the WHOLE tree, not just top-level
+        tables — compaction swaps leaf partition dirs, so a crash can
+        leave a backup nested arbitrarily deep. Call once at startup.
+        Returns the root-relative paths recovered."""
+        from .maintenance import BACKUP_PREFIX, recover_overwrite
 
         recovered = []
         if os.path.isdir(self.root):
@@ -77,43 +79,30 @@ class Warehouse:
 
 def record_batch_stats(
     spark: SparkSession, wh: Warehouse, window: BatchWindow, table: str, batch_start: datetime
-) -> None:
+) -> int:
     """Append one lineage row to ``_meta/batch_runs``
-    (build_batch_stats.py:9-43), staged on the driver with pyarrow — the
-    pattern of ``append_versioned_rows``. A Spark job for one row costs a
-    scheduling round and a Python-worker trip (~0.3 s); this costs a few
-    ms. The file reads back exactly as a Spark-written one:
+    (build_batch_stats.py:9-43) through the versioned table protocol:
+    :func:`..sinks.snapshots.append_versioned_rows` stages the row on the
+    driver with pyarrow and commits it with a manifest publish. A Spark
+    job for one row costs a scheduling round and a Python-worker trip
+    (~0.3 s); this costs a few ms, and the row reads back exactly as a
+    Spark-written one (``batch_run_date`` stays ``timestamp_ntz``).
+    Every run is recorded, reruns included, so there is no txn id.
 
-    - values go through pyspark's own ``toInternal`` (what
-      ``createDataFrame`` stores), so the instants match to the
-      microsecond, local-zone handling of naive datetimes included;
-    - the footer carries Spark's schema JSON under
-      ``org.apache.spark.sql.parquet.row.metadata``, so
-      ``batch_run_date`` reads back as ``timestamp_ntz``;
-    - the file is written under a dot-prefixed name, which readers skip,
-      then renamed into place."""
-    import uuid
+    A lineage dir written before the table was versioned (plain parquet,
+    no manifest) is adopted once with :func:`..sinks.snapshots.snapshot`,
+    so its rows stay in the table. Returns the published version."""
+    from ..sinks import snapshots as S
 
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    row = (window.batch_id, window.batch_run_date, window.start_ledger, window.end_ledger, table, batch_start)
-    # toInternal gives microseconds for both timestamp kinds; only
-    # TimestampType is UTC-adjusted
-    arrow_types = (pa.string(), pa.timestamp("us"), pa.int64(), pa.int64(), pa.string(), pa.timestamp("us", tz="UTC"))
-    arrays = [
-        pa.array([f.dataType.toInternal(v)], type=t)
-        for f, v, t in zip(BATCH_RUNS_SCHEMA.fields, row, arrow_types)
-    ]
-    tbl = pa.Table.from_arrays(arrays, names=BATCH_RUNS_SCHEMA.names).replace_schema_metadata(
-        {"org.apache.spark.sql.parquet.row.metadata": BATCH_RUNS_SCHEMA.json()}
-    )
     path = wh.meta_path()
-    os.makedirs(path, exist_ok=True)
-    name = f"part-{uuid.uuid4().hex}.parquet"
-    tmp = os.path.join(path, f".{name}.tmp")
-    pq.write_table(tbl, tmp)
-    os.replace(tmp, os.path.join(path, name))
+    if S.latest_version(path) is None and S._list_data_files(path):
+        try:
+            S.snapshot(path)
+        except (ValueError, S.ConcurrentWriteError):
+            if S.latest_version(path) is None:
+                raise  # not a lost race with a concurrent adopter
+    row = (window.batch_id, window.batch_run_date, window.start_ledger, window.end_ledger, table, batch_start)
+    return S.append_versioned_rows(spark, [row], BATCH_RUNS_DDL, path)
 
 
 def record_ingest_counters(

@@ -1,4 +1,5 @@
-"""Table maintenance: small-file compaction with optional sort clustering.
+"""Table maintenance: small-file compaction with optional sort clustering
+for plain directory tables.
 
 A 10-minute ingest cadence (history_tables_dag.py:43) writing per-batch
 partitions produces thousands of small parquet files per month at 100 TB —
@@ -13,19 +14,88 @@ directories (e.g. ``_p=2024-01/batch_id=.../``), and rewrites each leaf
 whose file count exceeds the bin-packed target, sized from the leaf's
 actual bytes. Optional ``sort_cols`` applies ``sortWithinPartitions``
 (z-order-lite clustering: range-correlated columns end up co-located, so
-min/max row-group pruning works after compaction). Each leaf rewrite is
-atomic via the same sibling-rename swap MERGE uses (safe_overwrite), so a
-crash mid-compaction never loses a partition.
+min/max row-group pruning works after compaction).
+
+These tables have no manifest: readers list the directory, so a leaf can
+only be replaced by swapping directories. Each leaf rewrite goes through
+:func:`safe_overwrite` (write a sibling, then two renames), and a crash
+between the renames leaves a ``.bak-`` backup that
+``Warehouse.recover`` restores, so compaction never loses a partition.
+Spark's dynamic partition overwrite can also rewrite a leaf it reads
+from, but a process death between its commit-time delete and rename
+loses the leaf with no backup to recover. Versioned tables (state
+tables, ``_meta`` tables) never take this path: they compact with
+``snapshots.compact_snapshot``, which commits through the manifest log.
 """
 
 from __future__ import annotations
 
 import math
 import os
+import shutil
+import uuid
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
-from .merge import safe_overwrite
+#: backup-directory prefix. Dot-prefixed so Spark/Hadoop path filters skip
+#: it during partition discovery — a crash that leaves a backup nested deep
+#: in a partition tree (e.g. mid-compaction) must not surface as a bogus
+#: partition value or duplicate rows in table scans.
+BACKUP_PREFIX = ".bak-"
+
+
+def backup_path(path: str) -> str:
+    """Sibling backup dir used by :func:`safe_overwrite` during the swap."""
+    parent, name = os.path.split(os.path.abspath(path))
+    return os.path.join(parent, BACKUP_PREFIX + name)
+
+
+def recover_overwrite(path: str) -> bool:
+    """Recover from a ``safe_overwrite`` interrupted between its two
+    renames: if only the ``.bak-<name>`` sibling exists, the new directory
+    never landed — rename the old data back. Returns True if a recovery
+    happened. Call at startup (``Warehouse.recover`` runs it across the
+    whole tree) before reading tables."""
+    old = backup_path(path)
+    if os.path.isdir(old) and not os.path.exists(path):
+        os.rename(old, path)
+        return True
+    return False
+
+
+def safe_overwrite(spark: SparkSession, df: DataFrame, path: str) -> None:
+    """Copy-on-write directory rewrite: write to a temp dir, then swap.
+    Plain parquet cannot be read and overwritten in one job; Delta/Iceberg
+    do this natively via the transaction log.
+
+    Crash-safety: the temp dir is a SIBLING of ``path`` (same filesystem),
+    so both swap steps are atomic ``os.rename`` calls — never a recursive
+    copy. The only non-atomic window is between the two renames; a crash
+    there leaves ``.bak-<name>`` holding the full previous directory, which
+    :func:`recover_overwrite` restores on startup. The backup is deleted
+    only after the new directory is in place, and its dot prefix keeps it
+    invisible to Spark partition discovery even when ``path`` is a leaf
+    deep inside a partition tree."""
+    parent = os.path.dirname(os.path.abspath(path)) or "."
+    os.makedirs(parent, exist_ok=True)
+    tmp = os.path.join(parent, f".merge-tmp-{uuid.uuid4().hex}")
+    old = backup_path(path)
+    try:
+        df.write.mode("overwrite").parquet(tmp)
+        if os.path.exists(old):
+            shutil.rmtree(old)  # leftover from a prior completed swap
+        if os.path.exists(path):
+            os.rename(path, old)
+        os.rename(tmp, path)
+    except BaseException:
+        # failed before the final rename: put the previous directory back
+        # and drop the partial temp output
+        if os.path.exists(old) and not os.path.exists(path):
+            os.rename(old, path)
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise
+    if os.path.exists(old):
+        shutil.rmtree(old)
 
 
 def _leaf_dirs(root: str) -> list[str]:
@@ -65,68 +135,4 @@ def compact_table(
             df = df.sortWithinPartitions(*sort_cols)
         safe_overwrite(spark, df, leaf)
         results[leaf] = (n_files, _dir_stats(leaf)[0])
-    return results
-
-
-def optimize_versioned(
-    spark: SparkSession,
-    path: str,
-    min_files: int = 2,
-    sort_cols: tuple[str, ...] = (),
-) -> dict[str, tuple[int, int]]:
-    """OPTIMIZE for manifest-snapshot tables (the ones `apply_changes` /
-    `merge_upsert_versioned` maintain): rewrite every bucket whose CURRENT
-    manifest lists >= ``min_files`` files into one file, and publish a new
-    manifest — never touching old files, so snapshot isolation and time
-    travel survive compaction exactly like a merge (Delta's OPTIMIZE
-    contract; expired files are reclaimed later by ``vacuum``).
-
-    Directory-level ``compact_table`` must NOT be used on these tables:
-    it rewrites files in place, which would corrupt every previously
-    published manifest. At 100 TB this operator is what keeps per-bucket
-    file counts O(1) as 10-minute merge batches accumulate.
-
-    Returns ``{bucket_dir: (files_before, files_after)}``.
-    """
-    import uuid as _uuid
-
-    from ..sinks import snapshots as S
-
-    m = S.read_manifest(path)
-    base = m.get("base", path)
-    groups: dict[str, list[str]] = {}
-    for f in m["files"]:
-        groups.setdefault(os.path.dirname(f), []).append(f)
-
-    keep: list[str] = []
-    new_files: list[str] = []
-    results: dict[str, tuple[int, int]] = {}
-    for d in sorted(groups):
-        files = sorted(groups[d])
-        if len(files) < min_files:
-            keep.extend(files)
-            continue
-        df = spark.read.option("basePath", base).parquet(*files).coalesce(1)
-        if sort_cols:
-            df = df.sortWithinPartitions(*sort_cols)
-        # partition columns came from the path; drop them before writing
-        # INTO the partition dir or they'd be duplicated in the data files
-        part_cols = [
-            seg.split("=", 1)[0]
-            for seg in os.path.relpath(d, base).split(os.sep)
-            if "=" in seg
-        ]
-        df = df.drop(*part_cols)
-        stage = os.path.join(d, f"_stage-{_uuid.uuid4().hex[:8]}")
-        df.write.parquet(stage)
-        for f in sorted(os.listdir(stage)):
-            if f.endswith(".parquet"):
-                dst = os.path.join(d, f"part-{_uuid.uuid4().hex}.parquet")
-                os.replace(os.path.join(stage, f), dst)
-                new_files.append(dst)
-        import shutil as _shutil
-
-        _shutil.rmtree(stage, ignore_errors=True)
-        results[d] = (len(files), 1)
-    S._publish(path, keep + new_files, base=base)
     return results

@@ -17,21 +17,21 @@ this module implements the identical semantics over plain parquet as
   target(kept) = target left_anti changes(keys)
   result       = kept UNION latest-change-per-key WHERE NOT deleted
 
-which is exactly the copy-on-write plan a MERGE compiles to. The rewrite
-is atomic via write-temp-then-swap (``safe_overwrite``).
+which is exactly the copy-on-write plan a MERGE compiles to.
 
 At 100 TB a full-table rewrite per 10-minute change batch is the scale
-killer (BigQuery's MERGE only rewrites matched blocks). The scoped variant
-(:func:`merge_upsert_scoped`) removes it without a transactional table
-format: the state table is hash-bucket partitioned on the merge key
-(``_p = pmod(xxhash64(keys), n_buckets)``), so every key's current row
-lives in exactly one known partition, a change batch touches only the
-buckets its keys hash to, and ONLY those leaf directories are rewritten —
-untouched partitions keep their files byte-identical. Each touched leaf
-swaps via the same backup-rename protocol as ``safe_overwrite``; a crash
-mid-swap is recoverable per-partition (``Warehouse.recover``), and because
-MERGE application is idempotent (latest-version-per-key wins), re-running
-the interrupted batch converges to the same state.
+killer (BigQuery's MERGE only rewrites matched blocks). The state table
+is therefore hash-bucket partitioned on the merge key
+(``_p = pmod(xxhash64(keys), n_buckets)``): every key's current row
+lives in exactly one known bucket, a change batch touches only the
+buckets its keys hash to, and only those buckets are rewritten. The
+rewrite writes new immutable files and commits them through the table's
+manifest log (``sinks/snapshots._publish``), the one commit point for
+state tables: readers never see a torn table, every prior version stays
+readable until ``vacuum``, and a crash before the commit leaves the
+table at the prior version with only orphan files. Re-running the
+interrupted batch converges (latest version per key wins), and a
+``txn_id`` makes the replay exactly-once.
 
 Changes within one batch may contain several versions of a key; the
 MERGE source is first collapsed to the latest version per key with the
@@ -41,6 +41,7 @@ ledger_entry_change DESC — v_accounts_current.sql:30-33).
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import threading
@@ -88,80 +89,6 @@ def key_bucket(keys: tuple[str, ...], n_buckets: int):
     """Stable hash bucket of the merge key — the partition value a key's
     current row always lives in."""
     return F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(n_buckets)).cast("int")
-
-
-def merge_upsert_scoped(
-    spark: SparkSession,
-    changes: DataFrame,
-    path: str,
-    keys: tuple[str, ...],
-    n_buckets: int = 64,
-    deleted_col: str = "deleted",
-    order_cols: tuple[str, ...] = ("last_modified_ledger", "ledger_entry_change"),
-) -> list[int]:
-    """Partition-scoped MERGE over a hash-bucketed parquet state table.
-
-    Reference semantics: build_apply_gcs_changes_to_bq_task.py:116-149
-    (MATCHED+deleted -> DELETE, MATCHED -> UPDATE, NOT MATCHED -> INSERT),
-    with BigQuery's targeted-rewrite cost profile: only the ``_p`` buckets
-    containing changed keys are read and rewritten. ``n_buckets`` fixes the
-    layout for the table's lifetime (storing it in a table manifest is the
-    caller's concern); at 100 TB size it so one bucket ~ a few GB.
-
-    Returns the sorted list of bucket values rewritten.
-    """
-    # persist the bucketed batch: the touched-bucket probe and the merged
-    # write both consume it; uncached, each re-runs the caller's whole
-    # upstream plan (batch-sized, unpersisted before return)
-    ch = changes.withColumn(BUCKET_COL, key_bucket(keys, n_buckets)).persist()
-    touched = sorted(r[0] for r in ch.select(BUCKET_COL).distinct().collect())
-    if not touched:
-        ch.unpersist()
-        return []
-    os.makedirs(path, exist_ok=True)
-    leaf = lambda root, v: os.path.join(root, f"{BUCKET_COL}={v}")  # noqa: E731
-    # a bucket emptied by a previous batch is a file-less dir — treat it as
-    # absent (reading it would fail schema inference)
-    existing = [
-        v
-        for v in touched
-        if os.path.isdir(leaf(path, v))
-        and any(f.endswith(".parquet") for f in os.listdir(leaf(path, v)))
-    ]
-    if existing:
-        tgt = spark.read.option("basePath", path).parquet(*[leaf(path, v) for v in existing])
-        extra = [c for c in tgt.columns if c not in set(ch.columns)]
-        if extra:
-            # a subset batch would silently DROP the target-only columns
-            # from every rewritten bucket (the versioned core raises for
-            # exactly this; review r8 added the same guard here)
-            ch.unpersist()
-            raise ValueError(
-                f"{path}: change batch columns {sorted(ch.columns)} lack "
-                f"table columns {sorted(extra)}; rewriting would drop them"
-            )
-        # basePath keeps the _p column; align column order with changes
-        tgt = tgt.select(*ch.columns)
-    else:
-        tgt = empty_df(spark, ch.schema)
-    merged = merge_upsert(tgt, ch, keys, deleted_col, order_cols)
-
-    # one job writes every touched bucket into a dot-prefixed sibling stage
-    # (invisible to Spark partition discovery), then each leaf swaps in via
-    # the backup-rename protocol
-    parent = os.path.dirname(os.path.abspath(path)) or "."
-    stage = os.path.join(parent, f".merge-stage-{uuid.uuid4().hex}")
-    try:
-        merged.write.partitionBy(BUCKET_COL).parquet(stage)
-        for v in touched:
-            # a bucket whose rows were all deleted produces no stage output;
-            # an empty leaf dir keeps the swap uniform and scans clean
-            os.makedirs(leaf(stage, v), exist_ok=True)
-            _swap_dir(leaf(stage, v), leaf(path, v))
-    finally:
-        ch.unpersist()
-        shutil.rmtree(stage, ignore_errors=True)
-    return touched
 
 
 def _txn_replay(path: str, txn_id: str | None) -> tuple[int, list[int]] | None:
@@ -215,14 +142,13 @@ def merge_upsert_versioned(
     ``read_snapshot`` merges schemas on read, surfacing missing columns
     as NULL. Without the flag, a column-set mismatch raises.
 
-    The Delta-style composition of :func:`merge_upsert_scoped` with the
-    manifest log (sinks/snapshots.py): touched buckets write NEW immutable
-    files under their ``_p=`` dirs (nothing is deleted or renamed), and
-    the next manifest lists untouched buckets' current files plus the new
-    files. Readers of any published version are never torn; an old version
-    is still exactly readable after any number of merges (until
-    ``vacuum``); a crash before publication leaves the table at the prior
-    version with only orphan files. Reference semantics unchanged:
+    Touched buckets write NEW immutable files under their ``_p=`` dirs
+    (nothing is deleted or renamed), and the next manifest lists
+    untouched buckets' current files plus the new files. Readers of any
+    published version are never torn; an old version is still exactly
+    readable after any number of merges (until ``vacuum``); a crash
+    before publication leaves the table at the prior version with only
+    orphan files. Reference semantics unchanged:
     build_apply_gcs_changes_to_bq_task.py:116-149. Read the table with
     ``snapshots.read_snapshot`` — raw directory scans would see every
     historical file.
@@ -232,23 +158,24 @@ def merge_upsert_versioned(
     replay = _txn_replay(path, txn_id)
     if replay is not None:
         return replay
-    props = load_table_props(path)
-    if props is not None:
-        pinned_keys = props.get("keys")
-        if pinned_keys is not None and pinned_keys != list(keys):
-            raise ValueError(f"{path} was created with keys={pinned_keys!r}; got {list(keys)!r}")
-        n_buckets = int(props.get("n_buckets", n_buckets))
-    else:
-        # pin the layout on FIRST use like apply_changes/additive do
-        # (review r8): without the pin, a later direct call with a
-        # different n_buckets would hash the same key into another
-        # bucket and silently duplicate state — the exact failure the
-        # docstring documents the pin preventing
-        save_table_props(
-            path,
-            {"n_buckets": n_buckets, "keys": list(keys),
-             "deleted_col": deleted_col, "order_cols": list(order_cols)},
-        )
+    props = pin_table_props(
+        path,
+        {"n_buckets": n_buckets, "keys": list(keys),
+         "deleted_col": deleted_col, "order_cols": list(order_cols)},
+        ("keys",),
+        "a bucketed merge table",
+    )
+    return _upsert_versioned(
+        spark, changes, path, keys, props, deleted_col, order_cols,
+        allow_schema_evolution, txn_id,
+    )
+
+
+def _upsert_versioned(
+    spark, changes, path, keys, props, deleted_col, order_cols, evolve, txn_id
+) -> tuple[int, list[int]]:
+    """The upsert combine over the MVCC bucket machinery, for a table
+    whose layout ``props`` the caller has already pinned."""
     batch_cols = set(changes.columns)
 
     def combine(tgt: DataFrame, ch: DataFrame) -> DataFrame:
@@ -268,14 +195,7 @@ def merge_upsert_versioned(
         return kept.unionByName(applied.select(*tgt.columns))
 
     return _merge_versioned_core(
-        spark,
-        changes,
-        path,
-        keys,
-        n_buckets,
-        combine,
-        evolve=allow_schema_evolution,
-        txn_id=txn_id,
+        spark, changes, path, keys, props, combine, evolve=evolve, txn_id=txn_id
     )
 
 
@@ -313,19 +233,13 @@ def merge_additive_versioned(
     # pin the layout exactly like apply_changes: a changed n_buckets
     # between batches would scatter keys across partitions and silently
     # split counters into duplicate rows
-    props = load_table_props(path)
-    if props is None:
-        save_table_props(
-            path,
-            {"n_buckets": n_buckets, "keys": list(keys), "sum_cols": list(sum_cols),
-             "additive": True},
-        )
-    else:
-        for pname, got in (("keys", list(keys)), ("sum_cols", list(sum_cols))):
-            pinned = props.get(pname, got)
-            if pinned != got:
-                raise ValueError(f"{path} was created with {pname}={pinned!r}; got {got!r}")
-        n_buckets = int(props["n_buckets"])
+    props = pin_table_props(
+        path,
+        {"n_buckets": n_buckets, "keys": list(keys), "sum_cols": list(sum_cols),
+         "additive": True},
+        ("keys", "sum_cols"),
+        "a bucketed merge table",
+    )
 
     def combine(tgt: DataFrame, ch: DataFrame) -> DataFrame:
         both = tgt.unionByName(ch)
@@ -337,7 +251,7 @@ def merge_additive_versioned(
 
     # additive combines are NOT replay-idempotent: pass ``txn_id`` under
     # any at-least-once delivery (streaming foreachBatch, retried jobs)
-    return _merge_versioned_core(spark, batch, path, keys, n_buckets, combine, txn_id=txn_id)
+    return _merge_versioned_core(spark, batch, path, keys, props, combine, txn_id=txn_id)
 
 
 def _align_schemas(a: DataFrame, b: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -407,7 +321,7 @@ def _merge_versioned_core(
     changes: DataFrame,
     path: str,
     keys: tuple[str, ...],
-    n_buckets: int,
+    props: dict,
     combine,
     evolve: bool = False,
     txn_id: str | None = None,
@@ -433,7 +347,7 @@ def _merge_versioned_core(
     for attempt in range(retries + 1):
         try:
             return _merge_versioned_once(
-                spark, changes, path, keys, n_buckets, combine,
+                spark, changes, path, keys, props, combine,
                 evolve=evolve, txn_id=txn_id,
             )
         except S.ConcurrentWriteError:
@@ -448,7 +362,7 @@ def _merge_versioned_once(
     changes: DataFrame,
     path: str,
     keys: tuple[str, ...],
-    n_buckets: int,
+    props: dict,
     combine,
     evolve: bool = False,
     txn_id: str | None = None,
@@ -456,6 +370,8 @@ def _merge_versioned_once(
     """Shared MVCC scoped-merge machinery: bucket the changes, read only
     touched buckets from the current manifest, apply ``combine(target,
     changes)``, write new immutable files, publish the next manifest.
+    ``props`` is the table's pinned layout (``n_buckets``, and the
+    optional ``stats_cols``/``bloom_cols`` pins).
 
     ``txn_id``: optional idempotency token (Delta's txnAppId/txnVersion
     idea). The manifest carries an applied-transaction ledger
@@ -468,6 +384,7 @@ def _merge_versioned_once(
     resets it (new table contents, new lineage)."""
     from ..sinks import snapshots as S
 
+    n_buckets = int(props["n_buckets"])
     os.makedirs(path, exist_ok=True)
     if S.latest_version(path) is None:
         # bootstrap: adopt whatever bucketed files already exist. Two
@@ -648,7 +565,6 @@ def _merge_versioned_once(
     # advisory manifest stats: pinned per-table via props ("stats_cols");
     # untouched buckets' files keep their recorded stats (incremental in
     # _publish), only the newly written files read footers
-    props = load_table_props(path) or {}
     # fall back to the previous manifest's pins (ADVICE r7, same rule as
     # compact_snapshot): a table bootstrapped via overwrite_versioned(
     # stats_cols=...) has manifest pins but no props file — sourcing only
@@ -679,6 +595,14 @@ def _merge_versioned_once(
     localized = os.path.abspath(m.get("base", path)) != os.path.abspath(path)
     had_flat = (not localized) and any(b is None for b in bmap.values())
     pub, keep_now = m, keep
+
+    def abandon() -> None:
+        # the computed files are stale: drop them (referenced by no
+        # manifest) and let the outer wrapper recompute fresh
+        S._drop_unpublished(new_files)
+        with _MERGE_STATS_LOCK:
+            MERGE_STATS["recomputes"] += 1
+
     # bounded: each rebase costs ~a manifest read, but an adversarial
     # publish stream must not spin this loop forever — past the cap the
     # loss escalates to the outer recompute wrapper like any other
@@ -689,11 +613,7 @@ def _merge_versioned_once(
                 # a same-txn peer landed while we computed: our staged
                 # files are referenced by NO manifest — drop them and
                 # return the peer's version (exactly-once)
-                for f in new_files:
-                    try:
-                        os.remove(f)
-                    except OSError:
-                        pass
+                S._drop_unpublished(new_files)
                 return int(txns_pub[txn_id]), []
             txns_pub[txn_id] = int(pub["version"]) + 1
         blooms = None
@@ -725,16 +645,8 @@ def _merge_versioned_once(
                 or had_flat
                 or not _rebase_compatible(path, int(pub["version"]), nm, touched_set)
             ):
-                # content under our touched buckets may have changed: the
-                # computed files are stale. Drop them (referenced by no
-                # manifest) and let the outer wrapper recompute fresh.
-                for f in new_files:
-                    try:
-                        os.remove(f)
-                    except OSError:
-                        pass
-                with _MERGE_STATS_LOCK:
-                    MERGE_STATS["recomputes"] += 1
+                # content under our touched buckets may have changed
+                abandon()
                 raise
             with _MERGE_STATS_LOCK:
                 MERGE_STATS["rebases"] += 1
@@ -747,13 +659,7 @@ def _merge_versioned_once(
             # lands flat files, silently dropping them here would lose
             # rows — recompute instead.
             if any(bucket_of(f) is None for f in nm["files"]):
-                for f in new_files:
-                    try:
-                        os.remove(f)
-                    except OSError:
-                        pass
-                with _MERGE_STATS_LOCK:
-                    MERGE_STATS["recomputes"] += 1
+                abandon()
                 raise S.ConcurrentWriteError(
                     f"rebase of {path} found flat (bucket-less) files in the "
                     "intervening manifest — an op _rebase_compatible admitted "
@@ -766,33 +672,12 @@ def _merge_versioned_once(
                 for f in nm["files"]
                 if (b := bucket_of(f)) is not None and b not in touched_set
             ]
-    # rebase cap exhausted: drop the staged files and escalate to the
-    # outer wrapper (counts as a recompute — the files are abandoned)
-    for f in new_files:
-        try:
-            os.remove(f)
-        except OSError:
-            pass
-    with _MERGE_STATS_LOCK:
-        MERGE_STATS["recomputes"] += 1
+    # rebase cap exhausted: escalate to the outer wrapper
+    abandon()
     raise S.ConcurrentWriteError(
         f"merge into {path} lost {64} consecutive publish races; retrying "
         "from fresh state"
     )
-
-
-def _swap_dir(src: str, dst: str) -> None:
-    """Atomically replace ``dst`` with ``src`` (same-filesystem renames),
-    leaving a ``.bak-`` sibling during the non-atomic window — the same
-    crash-recovery contract as :func:`safe_overwrite`."""
-    old = backup_path(dst)
-    if os.path.exists(old):
-        shutil.rmtree(old)
-    if os.path.exists(dst):
-        os.rename(dst, old)
-    os.rename(src, dst)
-    if os.path.exists(old):
-        shutil.rmtree(old)
 
 
 #: table-properties file, beside the snapshot manifests. Pins the physical
@@ -800,31 +685,59 @@ def _swap_dir(src: str, dst: str) -> None:
 _PROPS_FILE = "_props.json"
 
 
-def _props_path(path: str) -> str:
+def load_table_props(path: str, name: str = _PROPS_FILE) -> dict | None:
+    """Properties pinned at table creation (``n_buckets``, merge ``keys``,
+    ...), or None for a table that was never pinned. ``name`` selects the
+    pin file; additive-MoR tables keep theirs under their own name."""
     from ..sinks import snapshots as S
 
-    return os.path.join(S._snap_dir(path), _PROPS_FILE)
-
-
-def load_table_props(path: str) -> dict | None:
-    """Layout properties pinned at table creation (``n_buckets``, merge
-    ``keys``), or None for a table that has never been merged into."""
-    import json
-
     try:
-        with open(_props_path(path)) as fh:
+        with open(os.path.join(S._snap_dir(path), name)) as fh:
             return json.load(fh)
     except FileNotFoundError:
         return None
 
 
-def save_table_props(path: str, props: dict) -> None:
-    import json
-
+def pin_table_props(
+    path: str, props: dict, checked: tuple[str, ...], kind: str, name: str = _PROPS_FILE
+) -> dict:
+    """Pin ``props`` on first use, or check the ``checked`` keys against
+    the pin already there; returns the pinned props (an existing pin's
+    other values, e.g. ``n_buckets``, win). The pin is an exclusive
+    create: of two concurrent first writers exactly one pins, and the
+    other validates against the winner's pin like any later writer. A
+    replacing write would let each pass its own validation and the last
+    one win silently, hashing keys into two bucket layouts."""
     from ..sinks import snapshots as S
 
-    os.makedirs(S._snap_dir(path), exist_ok=True)
-    S._atomic_write(_props_path(path), json.dumps(props))
+    pinned = load_table_props(path, name)
+    if pinned is None:
+        os.makedirs(S._snap_dir(path), exist_ok=True)
+        try:
+            S._atomic_write_exclusive(os.path.join(S._snap_dir(path), name), json.dumps(props))
+            return props
+        except S.ConcurrentWriteError:
+            pinned = load_table_props(path, name)
+            if pinned is None:  # pinner vanished between link-fail and read
+                raise
+    for k in checked:
+        if pinned.get(k, props[k]) != props[k]:
+            raise ValueError(f"{path} is {kind} with {k}={pinned.get(k)!r}; got {props[k]!r}")
+    return pinned
+
+
+def is_bucketed(path: str, m: dict | None = None) -> bool:
+    """Whether ``path`` carries the bucketed merge layout: a props pin, or
+    any current file under a ``_p=`` dir. ``m`` is the current manifest
+    when the caller holds one; otherwise it is read with
+    ``resolve=False``, since only file names are needed."""
+    from ..sinks import snapshots as S
+
+    if load_table_props(path) is not None:
+        return True
+    if m is None:
+        m = S.read_manifest(path, resolve=False)
+    return any(f"{BUCKET_COL}=" in f for f in m["files"])
 
 
 def apply_changes(
@@ -865,40 +778,29 @@ def apply_changes(
     replay = _txn_replay(path, txn_id)
     if replay is not None:
         return replay
-    props = load_table_props(path)
-    if props is None:
-        save_table_props(
-            path,
-            {
-                "n_buckets": n_buckets,
-                "keys": list(keys),
-                "deleted_col": deleted_col,
-                "order_cols": list(order_cols),
-                # advisory manifest-stats columns for scan_snapshot
-                # pruning; first use pins them like the layout params
-                "stats_cols": list(stats_cols),
-                # per-file bloom filters for equality pruning on the
-                # merge keys (hash-like: [min,max] can't prune them)
-                "bloom_cols": list(bloom_cols),
-            },
-        )
-    else:
-        # every pinned merge-semantics parameter is validated, not just the
-        # layout: silently switching deleted_col/order_cols would change
-        # latest-row selection and delete handling mid-table
-        for pname, got in (
-            ("keys", list(keys)),
-            ("deleted_col", deleted_col),
-            ("order_cols", list(order_cols)),
-        ):
-            pinned = props.get(pname, got)
-            if pinned != got:
-                raise ValueError(f"{path} was created with {pname}={pinned!r}; got {got!r}")
-        n_buckets = int(props["n_buckets"])
-    return merge_upsert_versioned(
-        spark, changes, path, keys, n_buckets=n_buckets,
-        deleted_col=deleted_col, order_cols=order_cols, txn_id=txn_id,
-        allow_schema_evolution=allow_schema_evolution,
+    # every pinned merge-semantics parameter is validated, not just the
+    # layout: silently switching deleted_col/order_cols would change
+    # latest-row selection and delete handling mid-table
+    props = pin_table_props(
+        path,
+        {
+            "n_buckets": n_buckets,
+            "keys": list(keys),
+            "deleted_col": deleted_col,
+            "order_cols": list(order_cols),
+            # advisory manifest-stats columns for scan_snapshot
+            # pruning; first use pins them like the layout params
+            "stats_cols": list(stats_cols),
+            # per-file bloom filters for equality pruning on the
+            # merge keys (hash-like: [min,max] can't prune them)
+            "bloom_cols": list(bloom_cols),
+        },
+        ("keys", "deleted_col", "order_cols"),
+        "a bucketed merge table",
+    )
+    return _upsert_versioned(
+        spark, changes, path, keys, props, deleted_col, order_cols,
+        allow_schema_evolution, txn_id,
     )
 
 
@@ -961,64 +863,3 @@ def insert_unique(
         .drop("_iu_rn")
     )
     return deduped.join(target.select(*keys), list(keys), "left_anti")
-
-
-#: backup-directory prefix. Dot-prefixed so Spark/Hadoop path filters skip
-#: it during partition discovery — a crash that leaves a backup nested deep
-#: in a partition tree (e.g. mid-compaction) must not surface as a bogus
-#: partition value or duplicate rows in table scans.
-BACKUP_PREFIX = ".bak-"
-
-
-def backup_path(path: str) -> str:
-    """Sibling backup dir used by :func:`safe_overwrite` during the swap."""
-    parent, name = os.path.split(os.path.abspath(path))
-    return os.path.join(parent, BACKUP_PREFIX + name)
-
-
-def recover_overwrite(path: str) -> bool:
-    """Recover from a ``safe_overwrite`` interrupted between its two
-    renames: if only the ``.bak-<name>`` sibling exists, the new directory
-    never landed — rename the old data back. Returns True if a recovery
-    happened. Call at startup (``Warehouse.recover`` runs it across the
-    whole tree) before reading state tables."""
-    old = backup_path(path)
-    if os.path.isdir(old) and not os.path.exists(path):
-        os.rename(old, path)
-        return True
-    return False
-
-
-def safe_overwrite(spark: SparkSession, df: DataFrame, path: str) -> None:
-    """Copy-on-write table rewrite: write to a temp dir, then swap. Plain
-    parquet cannot be read and overwritten in one job; Delta/Iceberg do
-    this natively via the transaction log.
-
-    Crash-safety: the temp dir is a SIBLING of ``path`` (same filesystem),
-    so both swap steps are atomic ``os.rename`` calls — never a recursive
-    copy. The only non-atomic window is between the two renames; a crash
-    there leaves ``.bak-<name>`` holding the full previous table, which
-    :func:`recover_overwrite` restores on startup. The backup is deleted
-    only after the new directory is in place, and its dot prefix keeps it
-    invisible to Spark partition discovery even when ``path`` is a leaf
-    deep inside a partition tree (compaction)."""
-    parent = os.path.dirname(os.path.abspath(path)) or "."
-    os.makedirs(parent, exist_ok=True)
-    tmp = os.path.join(parent, f".merge-tmp-{uuid.uuid4().hex}")
-    old = backup_path(path)
-    try:
-        df.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(old):
-            shutil.rmtree(old)  # leftover from a prior completed swap
-        if os.path.exists(path):
-            os.rename(path, old)
-        os.rename(tmp, path)
-    except BaseException:
-        # failed before the final rename: put the previous table back and
-        # drop the partial temp output
-        if os.path.exists(old) and not os.path.exists(path):
-            os.rename(old, path)
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise
-    if os.path.exists(old):
-        shutil.rmtree(old)

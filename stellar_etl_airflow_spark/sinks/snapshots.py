@@ -666,6 +666,17 @@ _ADOPTED_RE = re.compile(r"^part-[0-9a-f]{32}\.parquet$")
 _BOOTSTRAP_ADOPTED_AGE_S = 3600.0
 
 
+def _drop_unpublished(files: list[str]) -> None:
+    """Delete staged files no manifest references (a lost or abandoned
+    publish) instead of leaving them to vacuum as orphans; a file that
+    is already gone is fine."""
+    for f in files:
+        try:
+            os.remove(f)
+        except OSError:
+            pass
+
+
 def adopt_staged(stage: str, path: str) -> list[str]:
     """Move a Spark-written stage directory's parquet output under
     ``path`` with collision-free final names, preserving any ``col=val``
@@ -839,18 +850,6 @@ def _split_ddl(schema: str) -> list[tuple[str, str]]:
     return out
 
 
-_ARROW_TYPES = {
-    "string": "string",
-    "long": "int64",
-    "bigint": "int64",
-    "int": "int32",
-    "integer": "int32",
-    "double": "float64",
-    "boolean": "bool_",
-    "date": "date32",
-}
-
-
 def append_versioned_rows(
     spark: SparkSession,
     rows: list[tuple],
@@ -870,64 +869,86 @@ def append_versioned_rows(
     one tiny write per batch per table, and scheduling those through
     the cluster is pure overhead). ``schema`` is a Spark DDL string
     over scalar types (string/long/int/double/boolean/date/
-    decimal(p,s)); a Spark frame is only constructed if the table
-    carries CHECK constraints (their expressions need an evaluator).
-    Content lands byte-compatible with the Spark-staged path: Spark
-    reads pyarrow-written parquet natively."""
+    decimal(p,s)/timestamp/timestamp_ntz); a Spark frame is only
+    constructed if the table carries CHECK constraints (their
+    expressions need an evaluator).
+
+    The file reads back exactly as a Spark-written one:
+
+    - values go through pyspark's own ``toInternal`` (what
+      ``createDataFrame`` stores), so timestamps match to the
+      microsecond, local-zone handling of naive datetimes included —
+      only ``timestamp`` is UTC-adjusted, ``timestamp_ntz`` is not;
+    - the footer carries Spark's schema JSON under
+      ``org.apache.spark.sql.parquet.row.metadata``, so
+      ``timestamp_ntz`` reads back as ``timestamp_ntz`` whatever the
+      session's NTZ inference setting."""
     import decimal as _decimal
     import re as _re
 
     import pyarrow as pa
     import pyarrow.parquet as pq
+    from pyspark.sql import types as T
 
-    fields = []
+    ts = (T.TimestampType(), pa.timestamp("us", tz="UTC"))
+    scalar = {
+        "string": (T.StringType(), pa.string()),
+        "long": (T.LongType(), pa.int64()),
+        "bigint": (T.LongType(), pa.int64()),
+        "int": (T.IntegerType(), pa.int32()),
+        "integer": (T.IntegerType(), pa.int32()),
+        "double": (T.DoubleType(), pa.float64()),
+        "boolean": (T.BooleanType(), pa.bool_()),
+        "date": (T.DateType(), pa.date32()),
+        "timestamp": ts,
+        "timestamp_ltz": ts,
+        "timestamp_ntz": (T.TimestampNTZType(), pa.timestamp("us")),
+    }
+    fields = []  # (name, Spark type, Arrow type)
     for name, typ in _split_ddl(schema):
         dm = _re.fullmatch(r"decimal\((\d+),\s*(\d+)\)", typ)
         if dm:
-            fields.append((name, pa.decimal128(int(dm.group(1)), int(dm.group(2)))))
-        elif typ in _ARROW_TYPES:
-            fields.append((name, getattr(pa, _ARROW_TYPES[typ])()))
+            p, sc = int(dm.group(1)), int(dm.group(2))
+            fields.append((name, T.DecimalType(p, sc), pa.decimal128(p, sc)))
+        elif typ in scalar:
+            fields.append((name, *scalar[typ]))
         else:
             raise ValueError(
                 f"append_versioned_rows supports scalar types only; column "
                 f"{name!r} has {typ!r} — use append_versioned with a DataFrame"
             )
-    arrow_schema = pa.schema(fields)
+    spark_schema = T.StructType([T.StructField(n, st) for n, st, _ in fields])
+    arrow_schema = pa.schema([(n, at) for n, _, at in fields]).with_metadata(
+        {"org.apache.spark.sql.parquet.row.metadata": spark_schema.json()}
+    )
     staged_fields = set(arrow_schema.names)
+    # accept str/int for decimal cells (exactness preserved); floats are
+    # refused upstream by the Spark-DDL contract
+    rows = [
+        tuple(
+            _decimal.Decimal(str(v))
+            if isinstance(st, T.DecimalType) and v is not None
+            and not isinstance(v, _decimal.Decimal) else v
+            for v, (_, st, _) in zip(r, fields)
+        )
+        for r in rows
+    ]
 
     def frame():
-        return local_df(
-            spark,
-            [
-                tuple(
-                    _decimal.Decimal(v) if isinstance(t, pa.Decimal128Type) and v is not None
-                    and not isinstance(v, _decimal.Decimal) else v
-                    for v, (_, t) in zip(r, fields)
-                )
-                for r in rows
-            ],
-            schema,
-        )
+        return local_df(spark, rows, schema)
 
     prev = _append_prestage(path, txn_id, staged_fields, frame)
     if isinstance(prev, int):
         return prev  # txn replay: the recorded version, nothing written
     cols = [list(c) for c in zip(*rows)] if rows else [[] for _ in fields]
-    for i, (name, t) in enumerate(fields):
-        if isinstance(t, pa.Decimal128Type):
-            # accept str/int for decimal cells (exactness preserved);
-            # floats are refused upstream by the Spark-DDL contract
-            cols[i] = [
-                v if v is None or isinstance(v, _decimal.Decimal)
-                else _decimal.Decimal(str(v))
-                for v in cols[i]
-            ]
     table = pa.table(
-        {name: pa.array(col, type=t) for col, (name, t) in zip(cols, fields)},
+        [pa.array([st.toInternal(v) for v in col], type=at) for col, (_, st, at) in zip(cols, fields)],
         schema=arrow_schema,
     )
-    dst = os.path.join(path, f"part-{uuid.uuid4().hex}.parquet")  # adopt-named
-    tmp = f"{dst}.tmp-{uuid.uuid4().hex[:8]}"
+    name = f"part-{uuid.uuid4().hex}.parquet"  # adopt-named
+    dst = os.path.join(path, name)
+    # dot-prefixed: a raw directory scan skips the half-written file
+    tmp = os.path.join(path, f".{name}.tmp-{uuid.uuid4().hex[:8]}")
     pq.write_table(table, tmp)
     os.replace(tmp, dst)  # appear atomically under the adopt naming contract
     return _append_publish(
@@ -1048,13 +1069,6 @@ def _append_publish(
     (:func:`append_versioned_rows`) paths. ``frame`` as in
     :func:`_append_prestage`."""
 
-    def _drop_staged():
-        for f in new_files:  # referenced by no manifest: don't leave orphans
-            try:
-                os.remove(f)
-            except OSError:
-                pass
-
     from ..operators.merge import BUCKET_COL
 
     new_set = set(new_files)
@@ -1070,7 +1084,7 @@ def _append_publish(
             # a column mapping landed AFTER the pre-stage guard (rename
             # racing this append): publishing logical-named files would
             # fork the physical schema — drop the staged files and refuse
-            _drop_staged()
+            _drop_unpublished(new_files)
             raise NotImplementedError(
                 f"{path} gained a column mapping while this append staged; "
                 "run compact_snapshot first."
@@ -1078,7 +1092,7 @@ def _append_publish(
         if m is not None and txn_id is not None and txn_id in (m.get("txns") or {}):
             # same-txn peer published while we staged: our files are
             # unreferenced by ANY manifest — drop them, return the peer's
-            _drop_staged()
+            _drop_unpublished(new_files)
             return int(m["txns"][txn_id])
         if m is not None and int(m["version"]) != checked_version:
             # Mid-loop re-validation (ADVICE r10, medium): an intervening
@@ -1089,7 +1103,7 @@ def _append_publish(
             # Guarded on version drift so the uncontended path pays
             # nothing extra.
             if any(f"{BUCKET_COL}=" in f for f in m["files"]):
-                _drop_staged()
+                _drop_unpublished(new_files)
                 raise NotImplementedError(
                     "the table gained a bucketed merge layout while this "
                     "append staged; write through merge_upsert_versioned / "
@@ -1100,7 +1114,7 @@ def _append_publish(
                 try:
                     check_constraints(frame(), mcons)
                 except Exception:
-                    _drop_staged()
+                    _drop_unpublished(new_files)
                     raise
                 checked_constraints = mcons
             live = [f for f in m["files"] if f not in new_set and os.path.exists(f)]
@@ -1109,7 +1123,7 @@ def _append_publish(
                 if probe not in probed_schema:
                     probed_schema[probe] = _parquet_fields(probe)
                 if probed_schema[probe] != staged_fields:
-                    _drop_staged()
+                    _drop_unpublished(new_files)
                     raise ValueError(
                         f"append schema mismatch at {path}: an intervening "
                         f"publish changed the table to "
@@ -1133,7 +1147,9 @@ def _append_publish(
         try:
             return _publish(
                 path,
-                (m["files"] if m else []) + new_files,
+                # a concurrent snapshot() bootstrap may already list our
+                # staged files (adopt-named, in the dir): list them once
+                [f for f in (m["files"] if m else []) if f not in new_set] + new_files,
                 base=m.get("base") if m else None,
                 mixed_schema=bool(m.get("mixed_schema")) if m else False,
                 txns=txns or None,
@@ -1145,7 +1161,7 @@ def _append_publish(
             )
         except ConcurrentWriteError:
             continue  # rebase: appends commute; staged files are reused
-    _drop_staged()
+    _drop_unpublished(new_files)
     raise ConcurrentWriteError(
         f"append to {path} lost the publish race {max_retries} times; "
         "the table is under heavy concurrent write load — retry later"
@@ -1175,7 +1191,7 @@ def unbucket_snapshot(
     content — the same bill as ``compact_snapshot``; at 100 TB do this
     per-table when schema surgery is actually needed, not on cadence.
     """
-    from ..operators.merge import BUCKET_COL, _props_path, load_table_props
+    from ..operators.merge import _PROPS_FILE, BUCKET_COL, load_table_props
 
     props = load_table_props(path) or {}
     m = read_manifest(path, resolve=False)
@@ -1195,7 +1211,7 @@ def unbucket_snapshot(
         expected_version=int(m["version"]),
     )
     try:
-        os.remove(_props_path(path))
+        os.remove(os.path.join(_snap_dir(path), _PROPS_FILE))
     except FileNotFoundError:
         pass
     return v
@@ -1324,12 +1340,9 @@ def translate_where(m: dict, where) -> list:
 
 
 def _mapping_guard(path: str) -> None:
-    from ..operators.merge import BUCKET_COL, load_table_props
+    from ..operators.merge import is_bucketed
 
-    bucketed = load_table_props(path) is not None or any(
-        f"{BUCKET_COL}=" in f for f in read_manifest(path)["files"]
-    )
-    if bucketed:
+    if is_bucketed(path):
         raise NotImplementedError(
             "rename/drop column is not supported on bucketed merge tables: "
             "the merge write path appends files with the frame's own column "
@@ -2325,18 +2338,10 @@ def compact_small_files(
                     ok = False
                     break
             if not ok:
-                for f in new_files:  # referenced by no manifest
-                    try:
-                        os.remove(f)
-                    except OSError:
-                        pass
+                _drop_unpublished(new_files)
                 raise
             pub = nm
-    for f in new_files:
-        try:
-            os.remove(f)
-        except OSError:
-            pass
+    _drop_unpublished(new_files)
     raise ConcurrentWriteError(
         f"compact_small_files on {path} lost 20 consecutive publish races"
     )
@@ -2527,12 +2532,10 @@ def delete_where_dv(
     survivors). Returns (new_version, rows_deleted). Bucketed merge
     tables are refused — their merge path rewrites buckets wholesale
     and would resurrect masked rows."""
-    from ..operators.merge import BUCKET_COL, load_table_props
+    from ..operators.merge import is_bucketed
 
     m = read_manifest(path, resolve=False)  # lazy shard pruning
-    if load_table_props(path) is not None or any(
-        f"{BUCKET_COL}=" in f for f in m["files"]
-    ):
+    if is_bucketed(path, m):
         raise NotImplementedError(
             "deletion vectors are not supported on bucketed merge tables: "
             "the merge write path rewrites buckets without consulting "

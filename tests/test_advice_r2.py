@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 from stellar_etl_airflow_spark.functions import translate_bq_sql
 from stellar_etl_airflow_spark.operators.ingest import Warehouse
 from stellar_etl_airflow_spark.operators.jobs import render_sql_template
-from stellar_etl_airflow_spark.operators.merge import recover_overwrite, safe_overwrite
+from stellar_etl_airflow_spark.operators.maintenance import recover_overwrite, safe_overwrite
 from stellar_etl_airflow_spark.queries.base import tables
 from stellar_etl_airflow_spark.training.dedup import with_word_ngrams
 
@@ -44,7 +44,7 @@ def test_translate_preserves_struct_field_paths():
 
 
 def test_safe_overwrite_tmp_is_sibling_and_recovers(spark, tmp_path):
-    from stellar_etl_airflow_spark.operators.merge import backup_path
+    from stellar_etl_airflow_spark.operators.maintenance import backup_path
 
     wh = Warehouse(str(tmp_path))
     path = wh.path("state_t")
@@ -67,7 +67,7 @@ def test_recover_walks_nested_partition_leaves(spark, tmp_path):
     tree; recovery must walk the tree, and until it runs the dot-prefixed
     backup must be invisible to Spark partition discovery (no bogus
     partition values, no duplicate rows)."""
-    from stellar_etl_airflow_spark.operators.merge import backup_path
+    from stellar_etl_airflow_spark.operators.maintenance import backup_path
 
     wh = Warehouse(str(tmp_path))
     path = wh.path("hist")

@@ -105,6 +105,58 @@ def test_compact_preserves_txn_ledger(spark, tmp_path):
            S.read_snapshot(spark, path).collect()}
     assert got[1] == 10.0  # not double-counted
 
+    # the same holds for an additive-MoR delta table: a delta replayed
+    # after compaction is still a no-op, not counted twice
+    from stellar_etl_airflow_spark.operators import additive_mor as AM
+
+    mor = str(tmp_path / "mor")
+    delta = spark.createDataFrame([(1, 5), (2, 7)], "k long, n long")
+    v1 = AM.write_delta(spark, delta, mor, ("k",), ("n",), txn_id="d-1")
+    AM.write_delta(spark, delta, mor, ("k",), ("n",), txn_id="d-2")
+    S.compact_snapshot(spark, mor)
+    assert AM.write_delta(spark, delta, mor, ("k",), ("n",), txn_id="d-1") == v1
+    assert {r["k"]: r["n"] for r in AM.read_additive(spark, mor).collect()} == {1: 10, 2: 14}
+
+
+def test_compact_snapshot_compacts_without_breaking_history(spark, tmp_path):
+    """After several writes a bucket holds several small files;
+    compact_snapshot rewrites each bucket to ONE file in a NEW manifest
+    version — current state identical, pre-compaction versions still
+    exactly readable (old files untouched), a later merge composes, and
+    vacuum reclaims the old files."""
+    from stellar_etl_airflow_spark.operators.merge import key_bucket, merge_upsert_versioned
+
+    tbl = str(tmp_path / "t")
+    keys = ("account_id",)
+    # two append writes -> each bucket dir holds 2 files (the multi-file
+    # accumulation a parallel merge write or bootstrap adoption produces)
+    for rows in ([(1, 1.0, 1, False), (2, 2.0, 1, False)], [(3, 3.0, 1, False), (4, 4.0, 1, False)]):
+        _batch(spark, rows).withColumn(BUCKET_COL, key_bucket(keys, 2)).coalesce(1).write.mode(
+            "append"
+        ).partitionBy(BUCKET_COL).parquet(tbl)
+    S.snapshot(tbl)
+    pre_version = S.latest_version(tbl)
+    pre_state = _content(spark, tbl)
+    assert [r[:2] for r in pre_state] == [(1, 1.0), (2, 2.0), (3, 3.0), (4, 4.0)]
+    pre_files = S.read_manifest(tbl, pre_version)["files"]
+    assert max(sum(os.path.dirname(f) == os.path.dirname(g) for g in pre_files) for f in pre_files) >= 2
+    assert S.compact_snapshot(spark, tbl) == pre_version + 1
+    files = S.read_manifest(tbl)["files"]
+    dirs = [os.path.dirname(f) for f in files]
+    assert len(dirs) == len(set(dirs))  # one file per bucket
+    assert len(files) < len(pre_files)
+    assert _content(spark, tbl) == pre_state  # current rows unchanged
+    assert _content(spark, tbl, pre_version) == pre_state  # history intact
+    # a later merge composes with the compacted layout
+    merge_upsert_versioned(
+        spark, _batch(spark, [(2, 9.0, 2, False)]), tbl, keys, n_buckets=2, order_cols=("seq",)
+    )
+    st = {r[0]: r[1] for r in _content(spark, tbl)}
+    assert st == {1: 1.0, 2: 9.0, 3: 3.0, 4: 4.0}
+    deleted = S.vacuum(tbl, keep_versions=1)
+    assert set(pre_files) <= set(deleted)  # expired pre-compaction files reclaimed
+    assert {r[0]: r[1] for r in _content(spark, tbl)} == st
+
 
 def test_compact_plain_table_with_stats(spark, tmp_path):
     path = str(tmp_path / "t")

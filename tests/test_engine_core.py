@@ -15,6 +15,7 @@ from pyspark.sql import types as T
 
 from stellar_etl_airflow_spark.models.runner import Model, ModelRegistry
 from stellar_etl_airflow_spark.operators import batch as B
+from stellar_etl_airflow_spark.operators import maintenance as MX
 from stellar_etl_airflow_spark.operators import merge as MG
 from stellar_etl_airflow_spark.operators import quality as Q
 from stellar_etl_airflow_spark.operators import scd2 as S2
@@ -130,23 +131,28 @@ def test_ingest_replay_idempotent(spark, tmp_path):
 
 
 def test_lineage_row_driver_staged_reads_like_spark_written(spark, tmp_path):
-    """record_batch_stats writes its row with pyarrow on the driver. Next to
-    a row written by Spark itself (createDataFrame + parquet append), both
-    read back identically, together and apart, with the table's schema —
-    batch_run_date stays timestamp_ntz and the instants match exactly."""
+    """record_batch_stats stages its row with pyarrow on the driver and
+    commits it to the versioned lineage table. The same row written by
+    Spark itself (createDataFrame + parquet write, into a sibling dir)
+    reads back identically, together and apart, with the table's
+    schema — batch_run_date stays timestamp_ntz and the instants match
+    exactly."""
     from stellar_etl_airflow_spark.operators.ingest import BATCH_RUNS_SCHEMA, record_batch_stats
     from stellar_etl_airflow_spark.session import local_df
+    from stellar_etl_airflow_spark.sinks import snapshots as S
 
     wh = Warehouse(str(tmp_path / "wh"))
     w = _window()
     start = datetime(2024, 3, 1, 12, 30, 45, 123456)
+    spark_dir = str(tmp_path / "spark_lineage")
     spark_row = ("spark-" + w.batch_id, w.batch_run_date, w.start_ledger, w.end_ledger, "accounts", start)
-    local_df(spark, [spark_row], BATCH_RUNS_SCHEMA).write.mode("append").parquet(wh.meta_path())
-    record_batch_stats(spark, wh, w, "accounts", start)
+    local_df(spark, [spark_row], BATCH_RUNS_SCHEMA).write.parquet(spark_dir)
+    v = record_batch_stats(spark, wh, w, "accounts", start)
 
-    files = [f for f in os.listdir(wh.meta_path()) if f.endswith(".parquet")]
-    assert len(files) == 2
-    assert not [f for f in os.listdir(wh.meta_path()) if f.endswith(".tmp")]
+    (staged,) = S.read_manifest(wh.meta_path())["files"]
+    assert S.latest_version(wh.meta_path()) == v
+    assert not [f for f in os.listdir(wh.meta_path()) if ".tmp" in f]
+    files = [staged] + [os.path.join(spark_dir, f) for f in os.listdir(spark_dir) if f.endswith(".parquet")]
     # the footer's Spark schema keeps timestamp_ntz even when inference
     # of NTZ from the parquet type is off (ensure_read_confs turns it off)
     conf = "spark.sql.parquet.inferTimestampNTZ.enabled"
@@ -155,16 +161,38 @@ def test_lineage_row_driver_staged_reads_like_spark_written(spark, tmp_path):
         for infer in ("true", "false"):
             spark.conf.set(conf, infer)
             for f in files:
-                assert spark.read.parquet(os.path.join(wh.meta_path(), f)).schema == BATCH_RUNS_SCHEMA
+                assert spark.read.parquet(f).schema == BATCH_RUNS_SCHEMA
+            assert S.read_snapshot(spark, wh.meta_path()).schema == BATCH_RUNS_SCHEMA
     finally:
         spark.conf.set(conf, prev)
-    both = spark.read.parquet(wh.meta_path())
+    both = S.read_snapshot(spark, wh.meta_path()).unionByName(spark.read.parquet(spark_dir))
     assert both.schema == BATCH_RUNS_SCHEMA
     cols = ["batch_run_date", "start_ledger", "end_ledger", "table_name", "batch_start",
             "unix_micros(batch_start) AS start_us", "cast(batch_run_date AS string) AS run_date"]
     got = {r["batch_id"]: tuple(r)[1:] for r in both.selectExpr("batch_id", *cols).collect()}
     assert got[w.batch_id] == got["spark-" + w.batch_id]
     assert got[w.batch_id][-1] == str(w.batch_run_date)
+
+
+def test_lineage_adopts_untracked_dir(spark, tmp_path):
+    """A lineage dir written before the table was versioned (plain
+    parquet, no manifest) is adopted once by the next lineage append:
+    its rows stay in the table and later appends add to them."""
+    from stellar_etl_airflow_spark.operators.ingest import BATCH_RUNS_SCHEMA, record_batch_stats
+    from stellar_etl_airflow_spark.session import local_df
+    from stellar_etl_airflow_spark.sinks import snapshots as S
+
+    wh = Warehouse(str(tmp_path / "wh"))
+    w = _window()
+    start = datetime(2024, 3, 1, 12, 30)
+    old = ("old-" + w.batch_id, w.batch_run_date, w.start_ledger, w.end_ledger, "accounts", start)
+    local_df(spark, [old], BATCH_RUNS_SCHEMA).write.parquet(wh.meta_path())
+    assert S.latest_version(wh.meta_path()) is None
+    record_batch_stats(spark, wh, w, "accounts", start)
+    record_batch_stats(spark, wh, w, "ledgers", start)
+    assert S.read_manifest(wh.meta_path())["op"] == "append"
+    got = sorted((r["batch_id"], r["table_name"]) for r in S.read_snapshot(spark, wh.meta_path()).collect())
+    assert got == sorted([("old-" + w.batch_id, "accounts"), (w.batch_id, "accounts"), (w.batch_id, "ledgers")])
 
 
 # ----------------------------------------------------------------------- merge
@@ -194,7 +222,7 @@ def test_safe_overwrite_roundtrip(spark, tmp_path):
     df = spark.createDataFrame([(1, "a")], "id long, v string")
     df.write.parquet(p)
     merged = spark.read.parquet(p).withColumn("v", F.lit("b"))
-    MG.safe_overwrite(spark, merged, p)
+    MX.safe_overwrite(spark, merged, p)
     assert spark.read.parquet(p).collect()[0]["v"] == "b"
 
 

@@ -133,43 +133,44 @@ def test_apply_changes_pins_layout_and_rejects_key_mismatch(spark, tmp_path):
         )
 
 
-def test_optimize_versioned_compacts_without_breaking_history(spark, tmp_path):
-    """After several merge batches a bucket holds several small files;
-    optimize_versioned rewrites each such bucket to ONE file in a NEW
-    manifest version — current state identical, pre-compaction versions
-    still exactly readable (old files untouched), vacuum reclaims them."""
-    from stellar_etl_airflow_spark.operators.maintenance import optimize_versioned
+def test_apply_changes_delete_insert_latest_wins_and_replay(spark, tmp_path):
+    """One apply_changes batch deletes a key, updates one with two
+    in-batch versions (the latest wins), and inserts a new key. Replaying
+    the batch, with or without a txn id, leaves the state unchanged."""
+    from stellar_etl_airflow_spark.operators.merge import apply_changes
 
-    from stellar_etl_airflow_spark.operators.merge import key_bucket
-
-    tbl = str(tmp_path / "t")
-    # two append writes -> each bucket dir holds 2 files (the multi-file
-    # accumulation a parallel merge write or bootstrap adoption produces)
-    for rows in ([(1, 1.0, 100, 1, False), (2, 2.0, 100, 1, False)],
-                 [(3, 3.0, 100, 1, False), (4, 4.0, 100, 1, False)]):
-        _changes(spark, rows).withColumn("_p", key_bucket(KEYS, 2)).coalesce(1).write.mode(
-            "append"
-        ).partitionBy("_p").parquet(tbl)
-    S.snapshot(tbl)
-    pre_version = S.latest_version(tbl)
-    pre_state = _state(spark, tbl)
-    assert pre_state == {1: 1.0, 2: 2.0, 3: 3.0, 4: 4.0}
-    results = optimize_versioned(spark, tbl, min_files=2)
-    assert results  # at least one bucket compacted
-    for d, (before, after) in results.items():
-        assert before >= 2 and after == 1
-    assert S.latest_version(tbl) == pre_version + 1
-    assert _state(spark, tbl) == pre_state  # current rows unchanged
-    assert _state(spark, tbl, pre_version) == pre_state  # history intact
-    # compacted manifest actually references fewer files
-    assert len(S.read_manifest(tbl)["files"]) < len(S.read_manifest(tbl, pre_version)["files"])
-    # a later merge composes with the compacted layout
-    merge_upsert_versioned(spark, _changes(spark, [(2, 9.0, 200, 1, False)]), tbl, KEYS, n_buckets=2)
+    tbl = str(tmp_path / "state")
+    apply_changes(spark, _changes(spark, [(i, float(i), 1, 1, False) for i in range(50)]), tbl, KEYS, n_buckets=8)
+    batch = _changes(
+        spark,
+        [(3, 0.0, 2, 1, True), (4, 40.0, 2, 1, False), (4, 44.0, 2, 2, False), (1000, 1.0, 2, 1, False)],
+    )
+    apply_changes(spark, batch, tbl, KEYS, txn_id="b1")
     st = _state(spark, tbl)
-    assert st[2] == 9.0 and st[1] == 1.0 and st[3] == 3.0
-    deleted = S.vacuum(tbl, keep_versions=1)
-    assert deleted  # expired pre-compaction files reclaimed
-    assert _state(spark, tbl) == {1: 1.0, 2: 9.0, 3: 3.0, 4: 4.0}
+    assert 3 not in st and st[4] == 44.0 and st[1000] == 1.0 and len(st) == 50
+    v = S.latest_version(tbl)
+    assert apply_changes(spark, batch, tbl, KEYS, txn_id="b1") == (v, [])  # ledger no-op
+    apply_changes(spark, batch, tbl, KEYS)  # idempotent rewrite
+    assert _state(spark, tbl) == st
+
+
+def test_apply_changes_empties_then_refills_bucket(spark, tmp_path):
+    """Deleting every key of a bucket leaves it without files in the
+    manifest; a later insert into the same bucket lands and reads clean."""
+    from stellar_etl_airflow_spark.operators.merge import apply_changes, key_bucket
+
+    tbl = str(tmp_path / "state")
+    seed = _changes(spark, [(i, 1.0, 1, 1, False) for i in range(20)])
+    apply_changes(spark, seed, tbl, KEYS, n_buckets=4)
+    bucket = {r["account_id"]: r["_b"] for r in seed.withColumn("_b", key_bucket(KEYS, 4)).collect()}
+    bucket0 = [i for i, b in bucket.items() if b == 0]
+    assert bucket0
+    apply_changes(spark, _changes(spark, [(i, 0.0, 2, 1, True) for i in bucket0]), tbl, KEYS)
+    st = _state(spark, tbl)
+    assert not set(bucket0) & set(st) and len(st) == 20 - len(bucket0)
+    assert not [f for f in S.read_manifest(tbl)["files"] if f"{BUCKET_COL}=0" in f]
+    apply_changes(spark, _changes(spark, [(bucket0[0], 9.0, 3, 1, False)]), tbl, KEYS)
+    assert _state(spark, tbl)[bucket0[0]] == 9.0
 
 
 def test_merge_versioned_schema_evolution(spark, tmp_path):

@@ -10,9 +10,10 @@ adjudicated in-repo:
   stats shard, interrupted bloom compute) — the loop now cleans its
   adopt-named files under a finally whenever it exits unpublished.
 - ``append_versioned_rows`` + Spark session timezone for TimestampNTZ:
-  REBUTTED — the driver-staged path supports no timestamp type at all
-  (``_ARROW_TYPES``); a timestamp DDL is refused with the scalar-types
-  message before anything is staged, so no tz conversion can diverge.
+  the driver-staged path converts timestamps with pyspark's own
+  ``toInternal`` and writes Spark's schema into the footer, so its rows
+  read back exactly like ``createDataFrame`` rows under any session
+  timezone.
 - ``_ADOPTED_RE`` exclusion in the bootstrap guard: a plain Spark/
   pyarrow writer cannot produce ``part-<32 hex>.parquet`` names, but a
   COPY of another snapshot table's data dir (without ``_snapshots``)
@@ -38,17 +39,32 @@ def _mk(spark, pairs, schema="k long, v long"):
     return spark.createDataFrame(pairs, schema).repartition(1)
 
 
-def test_append_rows_refuses_timestamp_types(spark, tmp_path):
-    """TimestampNTZ staging semantics would depend on the Spark session
-    timezone if pyarrow staged them naively; the driver-staged path
-    refuses every timestamp flavor up front instead (use
-    append_versioned with a DataFrame — the JVM write path owns tz)."""
-    tbl = str(tmp_path / "t")
-    for typ in ("timestamp", "timestamp_ntz", "timestamp_ltz"):
-        with pytest.raises(ValueError, match="scalar types only"):
-            S.append_versioned_rows(
-                spark, [("a", None)], f"k string, ts {typ}", tbl, txn_id="b0"
-            )
+def test_append_rows_stage_timestamps_like_spark(spark, tmp_path):
+    """Every timestamp flavor staged on the driver reads back exactly
+    like the same rows through createDataFrame — same type, same
+    instant — whatever the session timezone; non-scalar types are still
+    refused before anything is staged."""
+    from datetime import datetime
+
+    rows = [("a", datetime(2024, 3, 1, 12, 30, 45, 123456)), ("b", None)]
+    prev_tz = spark.conf.get("spark.sql.session.timeZone")
+    try:
+        for typ in ("timestamp", "timestamp_ntz", "timestamp_ltz"):
+            ddl = f"k string, ts {typ}"
+            tbl = str(tmp_path / typ)
+            S.append_versioned_rows(spark, rows, ddl, tbl, txn_id="b0")
+            for tz in ("UTC", "America/Los_Angeles"):
+                spark.conf.set("spark.sql.session.timeZone", tz)
+                got = S.read_snapshot(spark, tbl)
+                want = spark.createDataFrame(rows, ddl)
+                assert got.schema == want.schema
+                q = ["k", "cast(ts AS string) AS s", "unix_micros(cast(ts AS timestamp)) AS us"]
+                assert sorted(got.selectExpr(*q).collect()) == sorted(want.selectExpr(*q).collect())
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev_tz)
+    tbl = str(tmp_path / "m")
+    with pytest.raises(ValueError, match="scalar types only"):
+        S.append_versioned_rows(spark, [("a", None)], "k string, m map<string,long>", tbl)
     assert S.latest_version(tbl) is None  # nothing staged or published
 
 

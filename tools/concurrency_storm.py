@@ -88,12 +88,12 @@ def counting_core(counter: RetryCounter):
     before delegating to the single-attempt core, preserving the
     production retry/backoff shape."""
 
-    def core(spark, changes, path, keys, n_buckets, combine, evolve=False,
+    def core(spark, changes, path, keys, props, combine, evolve=False,
              txn_id=None, retries=30):
         for attempt in range(retries + 1):
             try:
                 return M._merge_versioned_once(
-                    spark, changes, path, keys, n_buckets, combine,
+                    spark, changes, path, keys, props, combine,
                     evolve=evolve, txn_id=txn_id,
                 )
             except S.ConcurrentWriteError:
